@@ -144,11 +144,6 @@ object StatQueries {
     * silently re-pay the boundary collects). */
   private[graft] def sliceMemoSize: Int = sliceMemo.size
 
-  /** Debug hook (scratch tooling only): the structural key strings. */
-  private[graft] def sliceMemoKeys: Seq[String] =
-    scala.jdk.CollectionConverters.EnumerationHasAsScala(sliceMemo.keys).asScala
-      .map(_.toString).toSeq
-
   private def computeSliceId(df: org.apache.spark.sql.DataFrame,
       bucketKey: org.apache.spark.sql.Column,
       nSlices: Int): org.apache.spark.sql.Column = {

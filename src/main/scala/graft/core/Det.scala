@@ -38,16 +38,6 @@ object Det {
     sum(dec(c * c)).cast("double") / n - m * m
   }
 
-  /** Deterministic population stddev. */
-  def dstdPop(c: Column): Column = sqrt(dvarPop(c))
-
-  /** Deterministic sample stddev (ddof=1). */
-  def dstdSamp(c: Column): Column = {
-    val n = count(c)
-    sqrt((sum(dec(c * c)).cast("double") - sum(dec(c)).cast("double") *
-      (sum(dec(c)).cast("double") / n)) / (n - lit(1)))
-  }
-
   /** Deterministic Pearson correlation via exact power sums. */
   def dcorr(x: Column, y: Column): Column = {
     val n = count(lit(1))

@@ -216,9 +216,6 @@ object BitmapOps {
   def cardinality(b: Array[Byte]): Long = deserialize(b).cardinality
   def andCardinality(a: Array[Byte], b: Array[Byte]): Long =
     deserialize(a).andCardinality(deserialize(b))
-  def orBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val bm = deserialize(a); bm.or(deserialize(b)); bm.serialize()
-  }
 
   /** Column API. `bitmapBuild` aggregates raw long ids into a bitmap;
     * `bitmapMerge` OR-unions already-built bitmaps; the scalar counts

@@ -173,15 +173,6 @@ object TextDedup {
     transform(sequence(lit(0), lit(k - 1)),
       i => array_min(transform(sh, s => xxhash64(s, i))))
 
-  /** LSH banding: split a k-signature into `bands` bands and hash each;
-    * docs sharing any band hash become candidates.
-    */
-  def bandHashes(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",", slice(sig, b * rows + 1, rows)), lit(b)).as("bh"))
-    }: _*)
-
   /** The precomputable half of MinHash dedup: (id, bhs) band-hash
     * signatures. Signature computation is the expensive part (k rehashes
     * of every token of every document); persisting it turns corpus-scale
@@ -665,13 +656,12 @@ object TextDedup {
     Components.connectedComponents(docs.select("id"), edges, maxIterations)
   }
 
-  /** 64-bit SimHash from a per-token hash array: bit j of the hash is set
-    * when the sum of ±1 contributions (per-token hash bit j) is positive.
-    * One codegen'd pass ([[graft.functions.SimHash64]]) — the equivalent
-    * `aggregate()` formulation evaluates 64 interpreted lambdas per token.
+  /** 64-bit SimHash of the text's hashed token set: bit j of the hash is
+    * set when the sum of ±1 contributions (per-token hash bit j) is
+    * positive. One codegen'd pass ([[graft.functions.SimHash64]]) — the
+    * equivalent `aggregate()` formulation evaluates 64 interpreted lambdas
+    * per token.
     */
-  def simhashFromHashes(hashes: Column): Column = simhash64(hashes)
-
   def simhash(text: Column): Column = simhash64(hashedTokenSet(text))
 
   /** SimHash near-dup pairs: candidates share one of four 16-bit chunks

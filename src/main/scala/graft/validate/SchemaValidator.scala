@@ -69,9 +69,7 @@ object SchemaValidator {
 
   final case class ValidationReport(
       total: Long, valid: Long, invalid: Long,
-      perRule: Map[String, Long]) {
-    def validRate: Double = if (total == 0) 1.0 else valid.toDouble / total
-  }
+      perRule: Map[String, Long])
 
   /** One aggregate pass over the violation projection: total/valid counts
     * plus per-rule violation counts (~60 metrics in a single job).

@@ -85,12 +85,8 @@ object Sinks {
     spark.read.orc(path)
 
   /** S7: CTAS backup of a registered table (reference
-    * data_warehouse.py:191-218) and stats collection for the CBO
-    * (the VACUUM/ANALYZE analog).
+    * data_warehouse.py:191-218).
     */
   def backupTable(spark: SparkSession, table: String, backupName: String): Unit =
     spark.sql(s"CREATE TABLE $backupName AS SELECT * FROM $table")
-
-  def analyzeTable(spark: SparkSession, table: String): Unit =
-    spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS FOR ALL COLUMNS")
 }
